@@ -55,11 +55,6 @@ def encode_varints_with_lengths(values: np.ndarray) -> tuple[bytes, np.ndarray]:
     return out[mask].tobytes(), lengths
 
 
-def encode_varints(values: np.ndarray) -> bytes:
-    """Vectorized LEB128 encode of a uint64 array."""
-    return encode_varints_with_lengths(values)[0]
-
-
 def decode_varints(buf: bytes, count: int) -> np.ndarray:
     """Vectorized LEB128 decode → uint64 array of ``count`` values."""
     if count == 0:

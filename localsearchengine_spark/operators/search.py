@@ -1,5 +1,6 @@
 """A13–A16, A18, A19 — query analysis, dictionary lookup, posting fetch +
-decode, conjunctive intersection, exhaustive BM25 scoring, top-k.
+decode, conjunctive intersection, disjunctive BM25 scoring (via
+``wand.wand_topk``), top-k.
 
 Interactive queries run driver-local over decoded NumPy arrays (SURVEY.md
 §3.2): a top-10 over a handful of terms must not pay Spark job-launch
@@ -263,8 +264,6 @@ class Index:
         term min/max statistics instead of reading the vocabulary — at
         10^12-turn vocabularies the dictionary is many files and a full scan
         per wildcard would dominate query latency."""
-        import pyarrow.dataset as ds
-
         return [t for t, _df in self.suggest(prefix, limit=limit)]
 
     # ---- A31: query suggestion / completion --------------------------------
@@ -566,8 +565,8 @@ class Index:
 
         mode="and"  — conjunctive posting intersection (A16), reference
                       default per BASELINE.json:6 "posting-list intersection"
-        mode="or"   — exhaustive disjunctive BM25 (A18)
-        mode="wand" — block-max WAND (A17); exact same top-k as "or"
+        mode="or"   — disjunctive BM25 (A18), answered by block-max WAND
+        mode="wand" — the same disjunctive path (A17), kept as an alias
 
         String queries support a minimal query language:
         ``"an exact phrase"`` / ``"a proximity phrase"~2`` (requires a
@@ -596,9 +595,7 @@ class Index:
             return []
         if mode == "and":
             return _and_topk(plists, k, self.cfg)
-        if mode == "or":
-            return _or_topk(plists, k, self.cfg)
-        if mode == "wand":
+        if mode in ("or", "wand"):
             return wand_topk(plists, k, self.cfg)
         raise ValueError(f"unknown mode: {mode}")
 
@@ -782,20 +779,6 @@ def parse_query(q: str, cfg: BM25Config):
     )
 
 
-def _score_at(plists, ids: np.ndarray, cfg: BM25Config) -> np.ndarray:
-    """Σ_t idf·(k1+1)·tf_norm for docs `ids`, summed in sorted term order.
-    plists must already be in sorted term order."""
-    scores = np.zeros(len(ids), dtype=np.float64)
-    for p in plists:  # sorted term order — fixed summation order
-        if len(p.doc_ids) == 0:
-            continue
-        pos = np.searchsorted(p.doc_ids, ids)
-        pos_c = np.minimum(pos, len(p.doc_ids) - 1)
-        hit = p.doc_ids[pos_c] == ids
-        scores += np.where(hit, p.idf * (cfg.k1 + 1.0) * p.tf_norm[pos_c], 0.0)
-    return scores
-
-
 def _topk(ids: np.ndarray, scores: np.ndarray, k: int) -> list[tuple[int, float]]:
     """A19 — k best by (score desc, doc_id asc); ids are unique."""
     if len(ids) == 0:
@@ -811,8 +794,8 @@ def _and_topk(plists, k: int, cfg: BM25Config) -> list[tuple[int, float]]:
     contain no candidate are never varint-decoded.  tf ≥ 1 ⇒ tf_norm > 0,
     so a zero contribution is exactly "doc absent".  Scores are then
     accumulated in sorted term order (the determinism contract) from the
-    same lookups, giving float64 results bit-identical to the exhaustive
-    path."""
+    same lookups, giving float64 results bit-identical to exhaustive
+    scoring."""
     from localsearchengine_spark.operators.wand import _contrib_at
 
     order = sorted(plists, key=lambda p: p.df)
@@ -836,12 +819,6 @@ def _and_topk(plists, k: int, cfg: BM25Config) -> list[tuple[int, float]]:
         else:
             scores += s * _contrib_at(p, ids)
     return _topk(ids, scores, k)
-
-
-def _or_topk(plists, k: int, cfg: BM25Config) -> list[tuple[int, float]]:
-    """A18 — exhaustive disjunctive scoring (the oracle path WAND must match)."""
-    ids = np.unique(np.concatenate([p.doc_ids for p in plists]))
-    return _topk(ids, _score_at(plists, ids, cfg), k)
 
 
 def _dismax_topk(groups, k: int, cfg: BM25Config) -> list[tuple[int, float]]:

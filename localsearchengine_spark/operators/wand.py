@@ -4,11 +4,12 @@ BASELINE.json:6: "top-k retrieval uses posting-list intersection with
 block-max WAND pruning".
 
 Exact: returns the identical top-k (docIDs and float64 scores) as the
-exhaustive disjunctive scorer (search._or_topk) — verified by the
-WAND==exhaustive equivalence tests.  This is *our* query-time optimizer
-(SURVEY.md §4): Catalyst cannot prune inside posting lists, so pruning
-lives here, below the DataFrame layer, driven by per-block ``tf_norm_max``
-bounds persisted at build time (codec.encode_blocks).
+exhaustive disjunctive scorer (the ``_or_topk`` reference in
+tests/test_wand_property.py) — verified by its WAND==exhaustive property
+tests.  This is *our* query-time optimizer (SURVEY.md §4): Catalyst
+cannot prune inside posting lists, so pruning lives here, below the
+DataFrame layer, driven by per-block ``tf_norm_max`` bounds persisted at
+build time (codec.encode_blocks).
 
 The classic document-at-a-time WAND loop is pointer-chasing — O(1) work
 per visited posting, which in CPython costs more than it saves.  This

@@ -13,7 +13,8 @@ from localsearchengine_spark.operators import codec
 @settings(max_examples=200, deadline=None)
 def test_varint_roundtrip(vals):
     arr = np.asarray(vals, dtype=np.uint64)
-    assert np.array_equal(codec.decode_varints(codec.encode_varints(arr), len(arr)), arr)
+    stream = codec.encode_varints_with_lengths(arr)[0]
+    assert np.array_equal(codec.decode_varints(stream, len(arr)), arr)
 
 
 @given(
@@ -45,7 +46,7 @@ def test_block_roundtrip(deltas, block_size):
 
 
 def test_empty():
-    assert codec.encode_varints(np.empty(0, dtype=np.uint64)) == b""
+    assert codec.encode_varints_with_lengths(np.empty(0, dtype=np.uint64))[0] == b""
     assert len(codec.decode_varints(b"", 0)) == 0
     assert codec.encode_blocks(
         np.empty(0), np.empty(0), np.empty(0), block_size=128, k1=1.2, b=0.75, avgdl=10

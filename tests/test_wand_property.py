@@ -11,12 +11,33 @@ from hypothesis import strategies as st
 
 from localsearchengine_spark.config import BM25Config
 from localsearchengine_spark.operators import codec
-from localsearchengine_spark.operators.search import TermPostings, _or_topk
+from localsearchengine_spark.operators.search import TermPostings, _topk
 from localsearchengine_spark.operators.wand import wand_topk
 
 CFG = BM25Config()
 RSJ = BM25Config(idf_variant="rsj")  # idf < 0 when df > N/2
 AVGDL = 20.0
+
+
+def _score_at(plists, ids: np.ndarray, cfg: BM25Config) -> np.ndarray:
+    """Σ_t idf·(k1+1)·tf_norm for docs `ids`, summed in sorted term order.
+    plists must already be in sorted term order."""
+    scores = np.zeros(len(ids), dtype=np.float64)
+    for p in plists:  # sorted term order — fixed summation order
+        if len(p.doc_ids) == 0:
+            continue
+        pos = np.searchsorted(p.doc_ids, ids)
+        pos_c = np.minimum(pos, len(p.doc_ids) - 1)
+        hit = p.doc_ids[pos_c] == ids
+        scores += np.where(hit, p.idf * (cfg.k1 + 1.0) * p.tf_norm[pos_c], 0.0)
+    return scores
+
+
+def _or_topk(plists, k: int, cfg: BM25Config) -> list[tuple[int, float]]:
+    """Exhaustive disjunctive scoring: every doc of every list is scored —
+    the reference WAND must match exactly."""
+    ids = np.unique(np.concatenate([p.doc_ids for p in plists]))
+    return _topk(ids, _score_at(plists, ids, cfg), k)
 
 
 def _term(name: str, doc_ids: list[int], rng: np.random.Generator, n_docs: int,
