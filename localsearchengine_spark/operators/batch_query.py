@@ -61,15 +61,13 @@ def _decode_arrow(rows: DataFrame, with_pos: bool = False) -> DataFrame:
     With ``with_pos``, each posting's within-doc position run rides along
     as an array column (posting i owns tf[i] flat positions).
 
-    mapInArrow keeps the compressed block structs as Arrow buffers — per
-    RecordBatch, the per-block metadata becomes NumPy views and each varint
-    stream is ONE contiguous buffer slice decoded in a single vectorized
-    LEB128 pass (concatenated varint streams are themselves a valid
-    stream; blocks are self-contained, so `docids_from_deltas` restores
-    absolutes across block boundaries).  The earlier mapInPandas kernel
-    converted every block struct to a Python dict first — measured as the
-    dominant cost of the decode stage, dwarfing the actual varint work."""
-    from localsearchengine_spark.operators.search import _binary_offsets
+    mapInArrow keeps the compressed block structs as Arrow buffers: each
+    RecordBatch goes through ``codec.read_blocks`` (one contiguous buffer
+    per varint stream) and is decoded in a single vectorized LEB128 pass
+    per stream.  The earlier mapInPandas kernel converted every block
+    struct to a Python dict first — measured as the dominant cost of the
+    decode stage, dwarfing the actual varint work."""
+    streams = codec.STREAMS + (("pos",) if with_pos else ())
 
     def decode(batches):
         import pyarrow as pa
@@ -78,27 +76,13 @@ def _decode_arrow(rows: DataFrame, with_pos: bool = False) -> DataFrame:
             if rb.num_rows == 0:
                 continue
             cols = {n: rb.column(i) for i, n in enumerate(rb.schema.names)}
-            la = cols["blocks"]
-            row_off = la.offsets.to_numpy().astype(np.int64)
-            flat = la.values
-            blk_lo, blk_hi = int(row_off[0]), int(row_off[-1])
-            if blk_hi == blk_lo:
+            sb = codec.read_blocks(cols["blocks"], np.arange(rb.num_rows), streams)
+            if len(sb) == 0:
                 continue
-            n_all = flat.field("n").to_numpy().astype(np.int64)[blk_lo:blk_hi]
-            total = int(n_all.sum())
-            streams = {}
-            for name in ("doc", "tf", "dl") + (("pos",) if with_pos else ()):
-                ba = flat.field(f"{name}_bytes")
-                boffs = _binary_offsets(ba)
-                data = ba.buffers()[2]
-                streams[name] = bytes(data[boffs[blk_lo] : boffs[blk_hi]])
-            deltas = codec.decode_varints(streams["doc"], total)
-            doc_ids = codec.docids_from_deltas(deltas, n_all)
-            tfs = codec.decode_varints(streams["tf"], total).astype(np.int64)
-            dls = codec.decode_varints(streams["dl"], total).astype(np.int64)
-            cs = np.concatenate(([0], np.cumsum(n_all)))
-            per_row = cs[row_off - blk_lo][1:] - cs[row_off - blk_lo][:-1]
-            term_idx = np.repeat(np.arange(rb.num_rows, dtype=np.int64), per_row)
+            doc_ids, tfs, dls = sb.decode_all()
+            row_off = cols["blocks"].offsets.to_numpy().astype(np.int64)
+            cs = np.concatenate(([0], np.cumsum(sb.counts)))[row_off - row_off[0]]
+            term_idx = np.repeat(np.arange(rb.num_rows, dtype=np.int64), np.diff(cs))
             arrays = [
                 cols["term"].take(pa.array(term_idx)),
                 pa.array(doc_ids, type=pa.int64()),
@@ -107,13 +91,11 @@ def _decode_arrow(rows: DataFrame, with_pos: bool = False) -> DataFrame:
             ]
             names = ["term", "doc_id", "tf", "dl"]
             if with_pos:
-                pos_flat = codec.decode_varints(
-                    streams["pos"], int(tfs.sum())
-                ).astype(np.int64)
                 tf_cum = np.concatenate(([0], np.cumsum(tfs))).astype(np.int32)
                 arrays.append(
                     pa.ListArray.from_arrays(
-                        pa.array(tf_cum), pa.array(pos_flat, type=pa.int64())
+                        pa.array(tf_cum),
+                        pa.array(sb.decode_positions(tfs), type=pa.int64()),
                     )
                 )
                 names.append("pos")

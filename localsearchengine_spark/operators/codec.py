@@ -11,15 +11,23 @@ Block layout (per posting-list block of up to ``block_size`` postings):
   tf_norm_max  float64 max over docs of tf/(tf + k1*(1-b+b*dl/avgdl)) —
                        block-max score bound = idf * (k1+1) * tf_norm_max
                        (Ding & Suel, SIGIR 2011)
+  max_tf       int64   max term frequency in the block  } bound inputs, so a
+  min_dl       int64   min document length in the block } merge can re-bound
   doc_bytes    binary  LEB128 varints of doc_id deltas (first = absolute)
   tf_bytes     binary  LEB128 varints of term frequencies
   dl_bytes     binary  LEB128 varints of document lengths (stored per posting
                        so query-time scoring needs no doc-table join — an
                        impact-style space/shuffle tradeoff, SURVEY.md §7.4)
+  pos_bytes    binary  LEB128 varints of within-doc token positions, tf per
+                       posting, ascending; empty unless store_positions
 
 Blocks are self-contained (the first doc_id of each block is stored absolute,
 not as a delta from the previous block) so salted sub-postings and segments
 can be concatenated in doc_id-range order without re-encoding (A7/A10).
+
+This module is the only reader of that layout: :func:`read_blocks` turns
+rows of an Arrow ``blocks`` column into a :class:`StreamBlocks`, which every
+decoder (interactive fetch, batch queries, compaction) goes through.
 """
 
 from __future__ import annotations
@@ -168,34 +176,6 @@ def encode_blocks(
     return blocks
 
 
-def decode_blocks(blocks: list) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Inverse of :func:`encode_blocks` → (doc_ids, tfs, dls) int64 arrays.
-
-    Accepts :class:`Block` tuples or any objects/dicts with the same fields
-    (e.g. Spark Row structs).
-    """
-    doc_parts: list[np.ndarray] = []
-    tf_parts: list[np.ndarray] = []
-    dl_parts: list[np.ndarray] = []
-    for blk in blocks:
-        if isinstance(blk, dict):
-            n, dob, tfb, dlb = blk["n"], blk["doc_bytes"], blk["tf_bytes"], blk["dl_bytes"]
-        else:
-            n, dob, tfb, dlb = blk.n, blk.doc_bytes, blk.tf_bytes, blk.dl_bytes
-        deltas = decode_varints(bytes(dob), n)
-        doc_parts.append(np.cumsum(deltas.astype(np.int64)))
-        tf_parts.append(decode_varints(bytes(tfb), n).astype(np.int64))
-        dl_parts.append(decode_varints(bytes(dlb), n).astype(np.int64))
-    if not doc_parts:
-        z = np.empty(0, dtype=np.int64)
-        return z, z.copy(), z.copy()
-    return (
-        np.concatenate(doc_parts),
-        np.concatenate(tf_parts),
-        np.concatenate(dl_parts),
-    )
-
-
 def docids_from_deltas(vals: np.ndarray, counts: np.ndarray) -> np.ndarray:
     """Concatenated per-block delta streams → absolute doc_ids in one pass.
 
@@ -222,20 +202,50 @@ def docids_from_deltas(vals: np.ndarray, counts: np.ndarray) -> np.ndarray:
     return c - np.repeat(prev, counts)
 
 
+# varint streams every posting block carries; "pos" exists on positional
+# indexes only
+STREAMS = ("doc", "tf", "dl")
+
+
+def _binary_offsets(ba) -> np.ndarray:
+    """Value offsets of an Arrow Binary/LargeBinary array as int64.
+
+    Plain ``binary`` stores int32 offsets, which cap a column chunk's byte
+    payload at 2 GiB; readers switch to ``large_binary`` (int64 offsets)
+    beyond that — a 100× index can hit it, so both layouts are handled
+    instead of assuming int32.
+    """
+    import pyarrow as pa
+
+    if pa.types.is_large_binary(ba.type) or pa.types.is_large_string(ba.type):
+        dtype = np.int64
+    elif pa.types.is_binary(ba.type) or pa.types.is_string(ba.type):
+        dtype = np.int32
+    else:
+        raise TypeError(f"expected a (large_)binary array, got {ba.type}")
+    return np.frombuffer(ba.buffers()[1], dtype=dtype)[
+        ba.offset : ba.offset + len(ba) + 1
+    ].astype(np.int64)
+
+
 class StreamBlocks:
     """Arrow-native posting-list storage: per stream, ONE contiguous byte
     buffer plus per-block offsets (straight from the parquet BinaryArray
-    layout, one memcpy per salt row).  decode of the whole list is a single
-    LEB128 pass per stream — concatenated varint streams are themselves a
-    valid varint stream — instead of a NumPy call per 128-entry block.
-    """
+    layout, one memcpy per run of adjacent rows).  decode of the whole list
+    is a single LEB128 pass per stream — concatenated varint streams are
+    themselves a valid varint stream — instead of a NumPy call per
+    128-entry block.  Per-block ``max_doc_id`` / ``tf_norm_max`` ride along
+    for block-max pruning."""
 
-    __slots__ = ("counts", "bufs", "offs")
+    __slots__ = ("counts", "max_doc_id", "tf_norm_max", "bufs", "offs")
 
-    def __init__(self, counts: np.ndarray, bufs: dict, offs: dict):
-        self.counts = counts  # int64 per block
-        self.bufs = bufs      # stream name -> bytes (concatenated blocks)
-        self.offs = offs      # stream name -> int64 offsets (len blocks+1)
+    def __init__(self, counts: np.ndarray, max_doc_id: np.ndarray,
+                 tf_norm_max: np.ndarray, bufs: dict, offs: dict):
+        self.counts = counts            # int64 per block
+        self.max_doc_id = max_doc_id    # int64 per block
+        self.tf_norm_max = tf_norm_max  # float64 per block
+        self.bufs = bufs  # stream name -> bytes (concatenated blocks)
+        self.offs = offs  # stream name -> int64 offsets (len blocks+1)
 
     def __len__(self) -> int:
         return len(self.counts)
@@ -252,16 +262,58 @@ class StreamBlocks:
     def decode_block(self, i: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         n = int(self.counts[i])
         out = []
-        for name in ("doc", "tf", "dl"):
+        for name in STREAMS:
             o = self.offs[name]
             out.append(decode_varints(self.bufs[name][o[i]:o[i + 1]], n))
         doc = np.cumsum(out[0].astype(np.int64))
         return doc, out[1].astype(np.int64), out[2].astype(np.int64)
 
+    def decode_positions(self, tfs: np.ndarray, i: int | None = None) -> np.ndarray:
+        """Flat within-doc positions of the whole list (or of block ``i``):
+        posting j owns the next ``tfs[j]`` values, ascending."""
+        buf = self.bufs["pos"]
+        if i is not None:
+            o = self.offs["pos"]
+            buf = buf[o[i]:o[i + 1]]
+        return decode_varints(buf, int(tfs.sum())).astype(np.int64)
 
-def decode_block_positions(pos_bytes: bytes, tfs: np.ndarray) -> list[np.ndarray]:
-    """pos_bytes of one block + its per-posting tf array → per-posting
-    ascending position arrays."""
-    total = int(tfs.sum())
-    flat = decode_varints(bytes(pos_bytes), total).astype(np.int64)
-    return np.split(flat, np.cumsum(tfs)[:-1])
+
+def read_blocks(blocks, rows, streams=STREAMS) -> StreamBlocks:
+    """Rows ``rows`` (non-empty) of an Arrow ``list<struct>`` column of
+    posting blocks, concatenated in the order given, → one
+    :class:`StreamBlocks`.
+
+    Arrow-native unpack: per-block metadata to NumPy, byte streams kept as
+    contiguous buffers — no Python object per block.  Each run of rows
+    whose blocks sit next to each other in the column is copied as one
+    slice, so a whole RecordBatch costs one memcpy per stream."""
+    row_off = blocks.offsets.to_numpy().astype(np.int64)
+    flat = blocks.values
+    rows = np.asarray(rows, dtype=np.int64)
+    first, last = row_off[rows], row_off[rows + 1]
+    lens = last - first
+    blk_idx = np.repeat(first - (np.cumsum(lens) - lens), lens) + np.arange(
+        int(lens.sum()), dtype=np.int64
+    )
+    new_run = np.ones(len(rows) + 1, dtype=bool)  # row i starts a run
+    np.not_equal(first[1:], last[:-1], out=new_run[1:-1])
+    run_lo, run_hi = first[new_run[:-1]], last[new_run[1:]]
+    bufs, offs = {}, {}
+    for name in streams:
+        ba = flat.field(f"{name}_bytes")
+        boffs = _binary_offsets(ba)
+        bdata = ba.buffers()[2]
+        bufs[name] = b"".join(
+            bytes(bdata[boffs[lo]:boffs[hi]]) for lo, hi in zip(run_lo, run_hi)
+        )
+        o = np.empty(len(blk_idx) + 1, dtype=np.int64)
+        o[0] = 0
+        np.cumsum(boffs[blk_idx + 1] - boffs[blk_idx], out=o[1:])
+        offs[name] = o
+    return StreamBlocks(
+        flat.field("n").to_numpy().astype(np.int64)[blk_idx],
+        flat.field("max_doc_id").to_numpy()[blk_idx],
+        flat.field("tf_norm_max").to_numpy()[blk_idx],
+        bufs,
+        offs,
+    )

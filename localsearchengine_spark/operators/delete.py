@@ -19,7 +19,8 @@ where rewriting the index per delete is absurd):
   references (and the driver gate's doc_id ≡ source doc_id invariant) out-
   live a compaction.  The rewrite is one distributed pass that reuses the
   build's own machinery: an Arrow kernel decodes each (term, salt) row's
-  blocks, drops tombstoned postings vectorized, and re-emits the build's
+  blocks (``codec.read_blocks``, the one reader of the block format), drops
+  tombstoned postings vectorized, and re-emits the build's
   packed EMIT_SCHEMA rows, which flow through ``build_posting_partitions``
   (salted shuffle → new-avgdl block encode → task-atomic segment write →
   manifests) and ``write_dictionary`` unchanged.  meta.json is written
@@ -84,18 +85,19 @@ def _emit_surviving(
     postings: DataFrame, tombstones: np.ndarray, with_pos: bool = False
 ) -> DataFrame:
     """(term, salt, blocks) rows → the build's packed EMIT_SCHEMA rows with
-    tombstoned postings dropped — the same Arrow-buffer decode as
-    `batch_query._decode_arrow`, but per-row grouping is preserved so the
-    output feeds `build_posting_partitions` directly (no explode, no extra
-    shuffle beyond the build's own salted repartition).  With ``with_pos``
-    the flat position stream rides along: posting i owns tf[i] positions,
-    so the posting keep-mask expands to positions with one np.repeat."""
+    tombstoned postings dropped.  Each RecordBatch is decoded through
+    ``codec.read_blocks``, like `batch_query._decode_arrow`, but per-row
+    grouping is preserved so the output feeds `build_posting_partitions`
+    directly (no explode, no extra shuffle beyond the build's own salted
+    repartition).  With ``with_pos`` the flat position stream rides along:
+    posting i owns tf[i] positions, so the posting keep-mask expands to
+    positions with one np.repeat."""
     from localsearchengine_spark.operators import codec
     from localsearchengine_spark.operators.postings import EMIT_SCHEMA, EMIT_SCHEMA_POS
-    from localsearchengine_spark.operators.search import _binary_offsets
 
     sc = postings.sparkSession.sparkContext
     ts_bc = sc.broadcast(tombstones)
+    streams = codec.STREAMS + (("pos",) if with_pos else ())
 
     def kernel(batches):
         import pyarrow as pa
@@ -105,31 +107,18 @@ def _emit_surviving(
             if rb.num_rows == 0:
                 continue
             cols = {n: rb.column(i) for i, n in enumerate(rb.schema.names)}
-            la = cols["blocks"]
-            row_off = la.offsets.to_numpy().astype(np.int64)
-            flat = la.values
-            blk_lo, blk_hi = int(row_off[0]), int(row_off[-1])
-            if blk_hi == blk_lo:
+            sb = codec.read_blocks(cols["blocks"], np.arange(rb.num_rows), streams)
+            if len(sb) == 0:
                 continue
-            n_all = flat.field("n").to_numpy().astype(np.int64)[blk_lo:blk_hi]
-            total = int(n_all.sum())
-            streams = {}
-            for name in ("doc", "tf", "dl") + (("pos",) if with_pos else ()):
-                ba = flat.field(f"{name}_bytes")
-                boffs = _binary_offsets(ba)
-                data = ba.buffers()[2]
-                streams[name] = bytes(data[boffs[blk_lo] : boffs[blk_hi]])
-            deltas = codec.decode_varints(streams["doc"], total)
-            doc_ids = codec.docids_from_deltas(deltas, n_all)
-            tfs = codec.decode_varints(streams["tf"], total).astype(np.int64)
-            dls = codec.decode_varints(streams["dl"], total).astype(np.int64)
+            doc_ids, tfs, dls = sb.decode_all()
             keep = ~_isin_sorted(doc_ids, ts)
             # per-row posting offsets → per-row KEPT offsets via one cumsum
-            cs = np.concatenate(([0], np.cumsum(n_all)))
-            row_posting_off = cs[row_off - blk_lo]
+            row_off = cols["blocks"].offsets.to_numpy().astype(np.int64)
+            row_posting_off = np.concatenate(([0], np.cumsum(sb.counts)))[
+                row_off - row_off[0]
+            ]
             kept_cum = np.concatenate(([0], np.cumsum(keep, dtype=np.int64)))
-            kept_off = kept_cum[row_posting_off]
-            offs = pa.array(kept_off.astype(np.int32))
+            offs = pa.array(kept_cum[row_posting_off].astype(np.int32))
             arrays = [
                 cols["term"],
                 cols["salt"],
@@ -141,9 +130,6 @@ def _emit_surviving(
             ]
             names = ["term", "salt", "doc_ids", "tfs", "dls"]
             if with_pos:
-                pos_flat = codec.decode_varints(
-                    streams["pos"], int(tfs.sum())
-                ).astype(np.int64)
                 pos_keep = np.repeat(keep, tfs)
                 kept_tf_cum = np.concatenate(
                     ([0], np.cumsum(np.where(keep, tfs, 0), dtype=np.int64))
@@ -151,7 +137,7 @@ def _emit_surviving(
                 arrays.append(
                     pa.ListArray.from_arrays(
                         pa.array(kept_tf_cum[row_posting_off].astype(np.int32)),
-                        pa.array(pos_flat[pos_keep], type=pa.int64()),
+                        pa.array(sb.decode_positions(tfs)[pos_keep], type=pa.int64()),
                     )
                 )
                 names.append("pos")

@@ -1,26 +1,19 @@
 """A10 — distributed segment merge.
 
 BASELINE.json:6: "distributed segment merge with per-partition lineage
-checkpoints".  Merges k complete indexes (segments) whose doc_id spaces are
-disjoint into one index.
+checkpoints".  Merges k complete indexes (segments) whose doc_id ranges are
+disjoint into one index.  Every index build in this package gives a segment a
+dense doc_id range starting at its ``doc_id_base`` (incremental batches,
+half-corpus builds), so after sorting the inputs by range, every term's
+merged posting list is just its segment rows in (segment, salt) order —
+blocks are self-contained (codec.py) and concatenate without re-encoding.
 
-Two paths:
-
-* **Ordered fast path** (the common case: incremental batches and lineage
-  groups are appended, *contiguous* doc_id ranges): blocks are
-  self-contained (codec.py), so a term's merged posting list is just its
-  segment rows in (segment, salt) order.  The merge is then a pure
-  DataFrame job — union → renumber salt = seg_idx·SALT_STRIDE + salt →
-  recompute block score bounds from (max_tf, min_dl) under the merged
-  corpus avgdl with JVM `transform()` expressions.  Zero Python in the
-  plan, zero decode, one shuffle-free write (plus the dictionary groupBy).
-
-* **Interleaved fallback**: doc ranges overlap (but doc_ids are still
-  globally unique across segments) — repartition by term and k-way merge
-  inside an Arrow `applyInPandas` stage: decode, merge-sort, re-encode.
-  Memory per task is bounded by the largest single term across segments;
-  at true scale callers should keep appends range-ordered (the builders in
-  this package always do).
+The merge is therefore a pure DataFrame job: union → renumber salt densely
+per term by (segment, salt) → recompute block score bounds from
+(max_tf, min_dl) under the merged corpus avgdl with a JVM `transform()`
+expression.  Zero Python in the plan, zero decode, one shuffle-free write
+(plus the dictionary groupBy).  Inputs whose doc_id ranges overlap are
+refused before anything is written.
 """
 
 from __future__ import annotations
@@ -29,14 +22,12 @@ import os
 import time
 import uuid
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from localsearchengine_spark.config import BuildConfig
-from localsearchengine_spark.operators import codec
 from localsearchengine_spark.utils import atomic_write_json, read_json
+
 
 def _bound_expr(max_tf, min_dl, k1: float, b: float, avgdl: float):
     from localsearchengine_spark.functions.bm25 import tf_norm_column
@@ -62,22 +53,20 @@ def _with_pos_bytes(posts: DataFrame) -> DataFrame:
     return posts.withColumn("blocks", new_blocks)
 
 
-def merge_indexes(
-    spark: SparkSession, index_dirs: list[str], out_dir: str,
-    force_path: str | None = None,
-) -> dict:
+def merge_indexes(spark: SparkSession, index_dirs: list[str], out_dir: str) -> dict:
     """Merge complete indexes at ``index_dirs`` into a new index at
-    ``out_dir``.  Returns the merged meta dict.  ``force_path`` overrides
-    path selection ("ordered"/"interleaved") — tests and external segments."""
+    ``out_dir``.  Returns the merged meta dict.  Raises ``ValueError`` if
+    two inputs' doc_id ranges overlap."""
     t0 = time.time()
     metas = [read_json(os.path.join(d, "meta.json")) for d in index_dirs]
     for m, d in zip(metas, index_dirs):
         if m.get("status") != "complete":
             raise RuntimeError(f"cannot merge incomplete index at {d}")
-    confs = {m["config"] for m in metas}
+    # compared as values: keys a newer or older version wrote are dropped
+    confs = {BuildConfig.from_json(m["config"]) for m in metas}
     if len(confs) != 1:
         raise RuntimeError("cannot merge indexes built with different configs")
-    conf = BuildConfig.from_json(metas[0]["config"])
+    conf = confs.pop()
     cfg = conf.bm25
 
     # ---- merged corpus stats ------------------------------------------------
@@ -85,7 +74,7 @@ def merge_indexes(
     total_tokens = sum(int(m["total_tokens"]) for m in metas)
     avgdl = total_tokens / n_docs if n_docs else 0.0
 
-    # ---- doc-range layout: ordered fast path vs interleaved fallback -------
+    # ---- doc-range layout: segments in doc_id order, ranges disjoint --------
     ranges = []
     for d in index_dirs:
         r = (
@@ -99,9 +88,12 @@ def merge_indexes(
     total_n = sum(r[2] for r in ranges)
     if total_n != n_docs:
         raise RuntimeError("docs tables inconsistent with metas")
-    ordered = all(ranges[i][1] < ranges[i + 1][0] for i in range(len(ranges) - 1))
-    if force_path is not None:
-        ordered = force_path == "ordered"
+    for (lo_a, hi_a, _, a), (lo_b, hi_b, _, b) in zip(ranges, ranges[1:]):
+        if hi_a >= lo_b:
+            raise ValueError(
+                f"doc_id ranges overlap: {a} has [{lo_a}, {hi_a}], "
+                f"{b} has [{lo_b}, {hi_b}]"
+            )
     seg_order = {r[3]: i for i, r in enumerate(ranges)}
 
     os.makedirs(out_dir, exist_ok=True)
@@ -128,10 +120,7 @@ def merge_indexes(
         part = _with_pos_bytes(raw).withColumn("seg", F.lit(seg_order[d]))
         posts = part if posts is None else posts.unionByName(part)
 
-    if ordered:
-        merged = _merge_ordered(posts, cfg.k1, cfg.b, avgdl)
-    else:
-        merged = _merge_interleaved(posts, conf, avgdl)
+    merged = _merge_ordered(posts, cfg.k1, cfg.b, avgdl)
     merged.write.mode("overwrite").parquet(os.path.join(out_dir, "postings"))
 
     # ---- dictionary (same shape + adaptive path as build.py) ----------------
@@ -141,7 +130,7 @@ def merge_indexes(
 
     meta = {
         "build_id": uuid.uuid4().hex[:12],
-        "config": metas[0]["config"],
+        "config": conf.to_json(),
         "snapshot": "+".join(m["snapshot"] for m in metas),
         "status": "complete",
         "source": "merge:" + ",".join(index_dirs),
@@ -150,7 +139,6 @@ def merge_indexes(
         "avgdl": avgdl,
         "num_partitions": int(metas[0].get("num_partitions", 8)),
         "merged_from": len(index_dirs),
-        "merge_path": "ordered" if ordered else "interleaved",
         "merge_elapsed_s": round(time.time() - t0, 3),
     }
     # A22 interplay: tombstones of the inputs carry into the merged index —
@@ -182,16 +170,8 @@ def _merge_ordered(posts: DataFrame, k1: float, b: float, avgdl: float) -> DataF
     from pyspark.sql import Window
     new_blocks = F.transform(
         F.col("blocks"),
-        lambda blk: F.struct(
-            blk["n"].alias("n"),
-            blk["max_doc_id"].alias("max_doc_id"),
-            _bound_expr(blk["max_tf"], blk["min_dl"], k1, b, avgdl).alias("tf_norm_max"),
-            blk["max_tf"].alias("max_tf"),
-            blk["min_dl"].alias("min_dl"),
-            blk["doc_bytes"].alias("doc_bytes"),
-            blk["tf_bytes"].alias("tf_bytes"),
-            blk["dl_bytes"].alias("dl_bytes"),
-            blk["pos_bytes"].alias("pos_bytes"),
+        lambda blk: blk.withField(
+            "tf_norm_max", _bound_expr(blk["max_tf"], blk["min_dl"], k1, b, avgdl)
         ),
     )
     w = Window.partitionBy("term").orderBy("seg", "salt")
@@ -209,94 +189,3 @@ def _merge_ordered(posts: DataFrame, k1: float, b: float, avgdl: float) -> DataF
         F.lit(-1).cast("int").alias("pid"),
         new_blocks.alias("blocks"),
     )
-
-
-def reorder_positions(
-    flat: np.ndarray, starts: np.ndarray, tfs: np.ndarray, order: np.ndarray
-) -> np.ndarray:
-    """Re-lay a flat per-posting position stream in merged posting order.
-
-    ``flat`` holds each posting's ``tfs[i]`` positions contiguously at
-    ``starts[i]``; the result is the same stream with postings permuted by
-    ``order`` — a vectorized gather (no Python loop over postings)."""
-    lens = tfs[order]
-    cum = np.concatenate(([0], np.cumsum(lens)))
-    idx = (
-        np.arange(cum[-1], dtype=np.int64)
-        - np.repeat(cum[:-1], lens)
-        + np.repeat(starts[order], lens)
-    )
-    return flat[idx]
-
-
-def _merge_interleaved(posts: DataFrame, conf: BuildConfig, avgdl: float) -> DataFrame:
-    """Arrow fallback: per-term decode → merge-sort → re-encode (positional
-    streams included: per-posting position runs are gathered into merged
-    order and re-blocked)."""
-    cfg = conf.bm25
-    block_size = conf.block_size
-
-    def merge_term(pdf: pd.DataFrame) -> pd.DataFrame:
-        term = pdf["term"].iloc[0]
-        pdf = pdf.sort_values(["seg", "salt"])
-        parts = [codec.decode_blocks(list(bl)) for bl in pdf["blocks"]]
-        d = np.concatenate([p[0] for p in parts])
-        t = np.concatenate([p[1] for p in parts])
-        L = np.concatenate([p[2] for p in parts])
-        has_pos = any(
-            len(blk["pos_bytes"] or b"") for bl in pdf["blocks"] for blk in bl
-        )
-        flat = starts = None
-        if has_pos:
-            # positions are absolute within-doc values (not cross-posting
-            # deltas), so per-part streams concatenate into one flat array;
-            # posting i of the unmerged order owns flat[starts[i] : +tf[i]]
-            flats = []
-            for bl, (_, pt, _) in zip(pdf["blocks"], parts):
-                raw = b"".join(bytes(blk["pos_bytes"] or b"") for blk in bl)
-                if not raw and pt.sum() > 0:
-                    raise ValueError(
-                        f"term {term!r}: segment mixes positional and "
-                        "position-less postings — cannot interleave-merge"
-                    )
-                flats.append(codec.decode_varints(raw, int(pt.sum())).astype(np.int64))
-            flat = np.concatenate(flats) if flats else np.empty(0, dtype=np.int64)
-            starts = np.concatenate(([0], np.cumsum(t)))[:-1]
-        order = np.argsort(d, kind="mergesort")
-        d_m, t_m, L_m = d[order], t[order], L[order]
-        if len(d_m) > 1 and (np.diff(d_m) == 0).any():
-            raise ValueError(f"duplicate doc_id across segments for term {term!r}")
-        positions = None
-        if has_pos:
-            positions = reorder_positions(flat, starts, t, order)
-        d, t, L = d_m, t_m, L_m
-        blocks = codec.encode_blocks(
-            d, t, L, block_size=block_size, k1=cfg.k1, b=cfg.b, avgdl=avgdl,
-            positions=positions,
-        )
-        return pd.DataFrame(
-            [
-                {
-                    "term": term,
-                    "salt": 0,
-                    "df": len(d),
-                    "cf": int(t.sum()),
-                    "max_tf_norm": max(blk.tf_norm_max for blk in blocks),
-                    "n_blocks": len(blocks),
-                    "pid": -1,
-                    "blocks": [blk._asdict() for blk in blocks],
-                }
-            ]
-        )
-
-    schema = (
-        "term string, salt int, df long, cf long, max_tf_norm double, n_blocks long, "
-        "pid int, "
-        "blocks array<struct<n:int,max_doc_id:long,tf_norm_max:double,"
-        "max_tf:long,min_dl:long,doc_bytes:binary,tf_bytes:binary,dl_bytes:binary,"
-        "pos_bytes:binary>>"
-    )
-    # groupBy+applyInPandas loads one term's rows per call — memory bounded
-    # by the largest single term across segments (acceptable fallback; the
-    # builders always produce range-ordered segments → fast path instead)
-    return posts.groupBy("term").applyInPandas(merge_term, schema=schema)

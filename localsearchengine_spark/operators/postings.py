@@ -64,6 +64,25 @@ EMIT_SCHEMA_POS = EMIT_SCHEMA + ", pos array<long>"
 # (term_code, salt) pair into one sortable int64 group key
 _SALT_CAP = 4096
 
+
+def reorder_positions(
+    flat: np.ndarray, starts: np.ndarray, tfs: np.ndarray, order: np.ndarray
+) -> np.ndarray:
+    """Re-lay a flat per-posting position stream in a new posting order.
+
+    ``flat`` holds each posting's ``tfs[i]`` positions contiguously at
+    ``starts[i]``; the result is the same stream with postings permuted by
+    ``order`` — a vectorized gather (no Python loop over postings)."""
+    lens = tfs[order]
+    cum = np.concatenate(([0], np.cumsum(lens)))
+    idx = (
+        np.arange(cum[-1], dtype=np.int64)
+        - np.repeat(cum[:-1], lens)
+        + np.repeat(starts[order], lens)
+    )
+    return flat[idx]
+
+
 def postings_arrow_schema():
     import pyarrow as pa
 
@@ -261,8 +280,6 @@ def emit_postings(
             ]
             names = ["term", "salt", "doc_ids", "tfs", "dls"]
             if with_pos:
-                from localsearchengine_spark.operators.merge import reorder_positions
-
                 flat = reorder_positions(
                     res["pos_flat"], res["pos_off"][:-1].astype(np.int64),
                     res["tf"], order,
@@ -357,8 +374,6 @@ def build_posting_partitions(
             if cur_pos:
                 flat = np.concatenate(cur_pos)
                 starts = np.cumsum(t) - t
-                from localsearchengine_spark.operators.merge import reorder_positions
-
                 pos = reorder_positions(flat, starts, t, order)
             d, t, L = d[order], t[order], L[order]
             if len(d) > 1 and (np.diff(d) <= 0).any():
@@ -517,7 +532,8 @@ def write_dictionary(spark, postings_dir: str, dict_dir: str) -> None:
             F.max("max_tf_norm").alias("max_tf_norm"),
             F.count(F.lit(1)).alias("n_rows"),
             F.sum("n_blocks").alias("n_blocks"),
-            F.sort_array(F.collect_set("pid")).alias("pids"),
+            # long elements, as the driver branch writes them
+            F.sort_array(F.collect_set("pid")).cast("array<long>").alias("pids"),
         )
         .write.mode("overwrite")
         .parquet(dict_dir)

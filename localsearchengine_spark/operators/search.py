@@ -38,33 +38,20 @@ class TermPostings:
     """
 
     __slots__ = (
-        "term", "idf", "df", "blocks", "block_max_doc", "block_bound_tfn",
+        "term", "idf", "df", "block_max_doc", "block_bound_tfn",
         "block_counts", "_streams", "_avgdl", "_cfg", "_block_cache", "_full",
         "_ts", "_live_counts",
     )
 
-    def __init__(self, term, blocks, idf, df, avgdl, cfg,
-                 streams: "codec.StreamBlocks | None" = None,
-                 block_max_doc: np.ndarray | None = None,
-                 block_bound_tfn: np.ndarray | None = None,
+    def __init__(self, term, streams: codec.StreamBlocks, idf, df, avgdl, cfg,
                  tombstones: np.ndarray | None = None):
         self.term = term
-        self.blocks = blocks  # raw dicts (legacy layout; None with streams)
         self.idf = float(idf)
         self.df = int(df)
         self._streams = streams
-        if streams is not None:
-            self.block_max_doc = block_max_doc
-            self.block_bound_tfn = block_bound_tfn
-            self.block_counts = streams.counts
-        else:
-            self.block_max_doc = np.asarray(
-                [b["max_doc_id"] for b in blocks], dtype=np.int64
-            )
-            self.block_bound_tfn = np.asarray(
-                [b["tf_norm_max"] for b in blocks], dtype=np.float64
-            )
-            self.block_counts = np.asarray([b["n"] for b in blocks], dtype=np.int64)
+        self.block_max_doc = streams.max_doc_id
+        self.block_bound_tfn = streams.tf_norm_max
+        self.block_counts = streams.counts
         self._avgdl = float(avgdl)
         self._cfg = cfg
         self._block_cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
@@ -87,11 +74,7 @@ class TermPostings:
         """→ (doc_ids, tf_norm) of block ``i`` (cached)."""
         hit = self._block_cache.get(i)
         if hit is None:
-            if self._streams is not None:
-                ids, tfs, dls = self._streams.decode_block(i)
-            else:
-                ids, tfs, dls = codec.decode_blocks([self.blocks[i]])
-            ids, tfs, dls = self._mask_deleted(ids, tfs, dls)
+            ids, tfs, dls = self._mask_deleted(*self._streams.decode_block(i))
             hit = (ids, tf_norm_np(tfs, dls, self._avgdl, self._cfg))
             self._block_cache[i] = hit
         return hit
@@ -108,10 +91,7 @@ class TermPostings:
 
     def decode_all(self) -> tuple[np.ndarray, np.ndarray]:
         if self._full is None:
-            if self._streams is not None:
-                ids, tfs, dls = self._streams.decode_all()
-            else:
-                ids, tfs, dls = codec.decode_blocks(self.blocks)
+            ids, tfs, dls = self._streams.decode_all()
             if self._ts is not None and len(ids):
                 pos = np.searchsorted(self._ts, ids)
                 live = self._ts[np.minimum(pos, len(self._ts) - 1)] != ids
@@ -147,12 +127,6 @@ class TermPostings:
     def tf_norm(self) -> np.ndarray:
         return self.decode_all()[1]
 
-    @property
-    def max_score(self) -> float:
-        return float(
-            self.idf * (self.block_bound_tfn.max() if self.n_blocks else 0.0)
-        )
-
     def positions_for(self, ids: np.ndarray) -> dict[int, np.ndarray]:
         """docID → ascending within-doc positions, decoding only the blocks
         the requested docs fall into.  Requires a positional index."""
@@ -163,40 +137,14 @@ class TermPostings:
         inside = bi < self.n_blocks
         for b in np.unique(bi[inside]):
             sel_ids = ids[inside & (bi == b)]
-            if self._streams is not None:
-                bids, btfs, _ = self._streams.decode_block(int(b))
-                o = self._streams.offs["pos"]
-                raw = self._streams.bufs["pos"][o[b]:o[b + 1]]
-            else:
-                bids, btfs, _ = codec.decode_blocks([self.blocks[int(b)]])
-                raw = self.blocks[int(b)].get("pos_bytes", b"")
-            plist = codec.decode_block_positions(raw, btfs)
+            bids, btfs, _ = self._streams.decode_block(int(b))
+            flat = self._streams.decode_positions(btfs, int(b))
+            plist = np.split(flat, np.cumsum(btfs)[:-1])
             pos_idx = np.searchsorted(bids, sel_ids)
             for j, did in zip(pos_idx, sel_ids):
                 if j < len(bids) and bids[j] == did:
                     out[int(did)] = plist[j]
         return out
-
-
-def _binary_offsets(ba) -> np.ndarray:
-    """Value offsets of an Arrow Binary/LargeBinary array as int64.
-
-    Plain ``binary`` stores int32 offsets, which cap a column chunk's byte
-    payload at 2 GiB; readers switch to ``large_binary`` (int64 offsets)
-    beyond that — a 100× index can hit it, so both layouts are handled
-    instead of assuming int32.
-    """
-    import pyarrow as pa
-
-    if pa.types.is_large_binary(ba.type) or pa.types.is_large_string(ba.type):
-        dtype = np.int64
-    elif pa.types.is_binary(ba.type) or pa.types.is_string(ba.type):
-        dtype = np.int32
-    else:
-        raise TypeError(f"expected a (large_)binary array, got {ba.type}")
-    return np.frombuffer(ba.buffers()[1], dtype=dtype)[
-        ba.offset : ba.offset + len(ba) + 1
-    ].astype(np.int64)
 
 
 class Index:
@@ -375,26 +323,11 @@ class Index:
                 columns=["term", "salt", "df", "blocks"],
                 filter=ds.field("term").isin(need),
             ).combine_chunks()
-            # arrow-native unpack: per-block metadata to numpy, byte streams
-            # kept as contiguous buffers — no Python dict per block
             term_col = tbl["term"].to_pylist()
             salt_col = tbl["salt"].to_numpy()
             df_col = tbl["df"].to_numpy()
             la = tbl["blocks"].combine_chunks()
-            row_off = la.offsets.to_numpy()
-            flat = la.values
-            n_all = flat.field("n").to_numpy().astype(np.int64)
-            md_all = flat.field("max_doc_id").to_numpy()
-            tfn_all = flat.field("tf_norm_max").to_numpy()
-            stream_raw = {}
-            names = ("doc", "tf", "dl") + (
-                ("pos",) if self.conf.store_positions else ()
-            )
-            for name in names:
-                ba = flat.field(f"{name}_bytes")
-                boffs = _binary_offsets(ba)
-                bdata = ba.buffers()[2]
-                stream_raw[name] = (boffs, bdata)
+            names = codec.STREAMS + (("pos",) if self.conf.store_positions else ())
             rows_by_term: dict[str, list[int]] = {}
             for r, t in enumerate(term_col):
                 rows_by_term.setdefault(t, []).append(r)
@@ -404,31 +337,14 @@ class Index:
                     self._cache[t] = None
                     continue
                 rows.sort(key=lambda r: int(salt_col[r]))  # salt = doc_id range order
-                blk_idx = np.concatenate(
-                    [np.arange(row_off[r], row_off[r + 1]) for r in rows]
-                )
-                counts = n_all[blk_idx]
-                bufs, offs = {}, {}
-                for name, (boffs, bdata) in stream_raw.items():
-                    segs = [bytes(bdata[boffs[row_off[r]] : boffs[row_off[r + 1]]])
-                            for r in rows]
-                    bufs[name] = b"".join(segs)
-                    lens = boffs[blk_idx + 1] - boffs[blk_idx]
-                    o = np.empty(len(blk_idx) + 1, dtype=np.int64)
-                    o[0] = 0
-                    np.cumsum(lens, out=o[1:])
-                    offs[name] = o
                 df_total = int(df_col[np.asarray(rows)].sum())
                 self._cache[t] = TermPostings(
                     term=t,
-                    blocks=None,
+                    streams=codec.read_blocks(la, rows, names),
                     idf=self.cfg.idf(df_total, self.n_docs),
                     df=df_total,
                     avgdl=self.avgdl,
                     cfg=self.cfg,
-                    streams=codec.StreamBlocks(counts, bufs, offs),
-                    block_max_doc=md_all[blk_idx],
-                    block_bound_tfn=tfn_all[blk_idx],
                     tombstones=self.tombstones,
                 )
         return {t: self._cache[t] for t in terms if self._cache.get(t) is not None}

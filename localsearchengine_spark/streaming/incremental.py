@@ -5,8 +5,8 @@ is an *extension*: new transcript conversations arriving on a stream are
 indexed as append segments and folded into the main index with the ordered
 fast-path merge (A10).  Each micro-batch must contain whole conversations
 (the deployment contract for the stream producer); its doc_id space starts
-at the current corpus size, so segments stay disjoint + range-ordered and
-the merge stays fully declarative.
+one past the live index's highest doc_id, so segments stay disjoint +
+range-ordered and the merge stays fully declarative.
 
 Exactly-once despite foreachBatch's at-least-once replay semantics:
 
@@ -25,6 +25,7 @@ from __future__ import annotations
 import os
 import shutil
 
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 
 from localsearchengine_spark.build import build_index
@@ -80,8 +81,15 @@ class IncrementalIndexer:
         base = 0
         have_main = os.path.exists(os.path.join(self.index_dir, "meta.json"))
         if have_main:
-            main_meta = read_json(os.path.join(self.index_dir, "meta.json"))
-            base = int(main_meta["n_docs"]) + int(main_meta.get("doc_id_base", 0))
+            # one past the live index's highest doc_id, not its doc count
+            # (compaction keeps doc_ids but lowers n_docs); read from the
+            # parquet footers' row-group statistics, so no scan and no job
+            docs = ds.dataset(os.path.join(self.index_dir, "docs"), format="parquet")
+            base = 1 + max(
+                rg.statistics["doc_id"]["max"]
+                for frag in docs.get_fragments()
+                for rg in frag.row_groups
+            )
         seg_dir = os.path.join(self.work_dir, f"seg-{epoch_id}")
         if os.path.exists(seg_dir):
             shutil.rmtree(seg_dir)  # epoch replay: rebuild deterministically

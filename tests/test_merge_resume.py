@@ -20,12 +20,11 @@ from localsearchengine_spark.sources.fixtures import (
 CONF = BuildConfig(num_partitions=6, hot_df_threshold=300, block_size=64)
 
 
-def _split_and_write(pdf, tmp, even_odd: bool):
+def _split_and_write(pdf, tmp):
+    """Prefix split by conversation → two segments with contiguous doc_id
+    ranges (the second built at doc_id_base = len(a))."""
     convs = sorted(pdf["conv_id"].unique())
-    if even_odd:  # interleaved doc ranges → exercises the fallback path
-        a_set = set(convs[::2])
-    else:  # prefix split → contiguous ranges → ordered fast path
-        a_set = set(convs[: len(convs) * 3 // 5])
+    a_set = set(convs[: len(convs) * 3 // 5])
     a = pdf[pdf["conv_id"].isin(a_set)].reset_index(drop=True)
     b = pdf[~pdf["conv_id"].isin(a_set)].reset_index(drop=True)
     pa_, pb_ = os.path.join(tmp, "a.parquet"), os.path.join(tmp, "b.parquet")
@@ -43,45 +42,57 @@ def _query_all(index, queries):
 def test_merge_ordered_fast_path(spark, built_index, transcripts_small, tmp_path):
     """Prefix split ⇒ contiguous doc ranges ⇒ declarative merge; merged index
     must answer every golden query identically (bit-equal scores) to the
-    single full build, because doc_ids line up with global conv order."""
+    single full build, because doc_ids line up with global conv order.
+    Input order does not matter: segments are merged in doc_id order."""
     full_idx, _, pdf = built_index
-    pa_, pb_, n_a, _ = _split_and_write(pdf, str(tmp_path), even_odd=False)
+    pa_, pb_, n_a, _ = _split_and_write(pdf, str(tmp_path))
     ia, ib = str(tmp_path / "ia"), str(tmp_path / "ib")
     build_index(spark, pa_, ia, CONF)
     build_index(spark, pb_, ib, CONF, doc_id_base=n_a)
     out = str(tmp_path / "merged")
-    meta = merge_indexes(spark, [ia, ib], out)
-    assert meta["merge_path"] == "ordered"
+    merge_indexes(spark, [ib, ia], out)
     queries = golden_queries()[::4]
     got = _query_all(Index(spark, out), queries)
     exp = _query_all(Index(spark, full_idx), queries)
     assert got == exp
 
 
-def test_merge_interleaved_fallback(spark, built_index, transcripts_small, tmp_path):
-    """The decode→merge-sort→re-encode fallback must produce the same query
-    results as the declarative ordered path on the same segments (forced via
-    force_path), and duplicate doc_ids across segments must be rejected."""
+def test_merge_rejects_overlapping_ranges(spark, built_index, tmp_path):
+    """Inputs whose doc_id ranges overlap are refused with an error naming
+    both, before anything is written to the output directory."""
+    full_idx, _, _ = built_index
+    bad = tmp_path / "bad"
+    with pytest.raises(ValueError, match="overlap") as exc:
+        merge_indexes(spark, [full_idx, full_idx], str(bad))
+    assert str(exc.value).count(full_idx) == 2
+    assert not (bad / "docs").exists()
+
+
+def test_merge_config_compared_by_value(spark, built_index, transcripts_small, tmp_path):
+    """A segment whose meta config carries a key this version does not
+    know (e.g. a field since deleted) still merges with one written now."""
+    import json
+
+    from localsearchengine_spark.utils import atomic_write_json, read_json
+
     full_idx, _, pdf = built_index
-    pa_, pb_, n_a, _ = _split_and_write(pdf, str(tmp_path), even_odd=False)
+    pa_, pb_, n_a, _ = _split_and_write(pdf, str(tmp_path))
     ia, ib = str(tmp_path / "ia"), str(tmp_path / "ib")
     build_index(spark, pa_, ia, CONF)
     build_index(spark, pb_, ib, CONF, doc_id_base=n_a)
-    fast = str(tmp_path / "fast")
-    slow = str(tmp_path / "slow")
-    assert merge_indexes(spark, [ia, ib], fast)["merge_path"] == "ordered"
-    assert (
-        merge_indexes(spark, [ia, ib], slow, force_path="interleaved")["merge_path"]
-        == "interleaved"
+    meta_p = os.path.join(ia, "meta.json")
+    meta = read_json(meta_p)
+    conf = json.loads(meta["config"])
+    conf["retired_knob"] = 8
+    meta["config"] = json.dumps(conf, sort_keys=True)
+    atomic_write_json(meta_p, meta)
+    out = str(tmp_path / "merged")
+    meta = merge_indexes(spark, [ia, ib], out)
+    assert BuildConfig.from_json(meta["config"]) == CONF
+    queries = golden_queries()[::10]
+    assert _query_all(Index(spark, out), queries) == _query_all(
+        Index(spark, full_idx), queries
     )
-    queries = golden_queries()[::4]
-    assert _query_all(Index(spark, slow), queries) == _query_all(
-        Index(spark, fast), queries
-    )
-    # duplicate doc_id spaces must be rejected by the fallback's merge check
-    with pytest.raises(Exception):
-        merge_indexes(spark, [ia, ia], str(tmp_path / "bad"), force_path="interleaved")
-        spark.read.parquet(os.path.join(str(tmp_path / "bad"), "postings")).collect()
 
 
 def test_resume_after_partial_failure(spark, transcripts_small, tmp_path):
@@ -126,22 +137,21 @@ def test_build_determinism_across_parallelism(spark, transcripts_small, tmp_path
     assert _query_all(Index(spark, i4), queries) == _query_all(Index(spark, i13), queries)
 
 
-def test_merge_positional_interleaved(spark, transcripts_small, tmp_path):
-    """Interleaved (decode→merge-sort→re-encode) merge of POSITIONAL
-    segments: the merged index must answer phrase queries identically to a
-    single full positional build (the round-1 NotImplementedError path)."""
+def test_merge_positional_segments(spark, transcripts_small, tmp_path):
+    """Merge of POSITIONAL segments: the position streams ride through the
+    declarative merge untouched, so the merged index answers phrase queries
+    identically to a single full positional build."""
     path, pdf = transcripts_small
     pconf = BuildConfig(num_partitions=4, hot_df_threshold=300, block_size=64,
                         store_positions=True)
     full = str(tmp_path / "pfull")
     build_index(spark, path, full, pconf)
-    pa_, pb_, n_a, _ = _split_and_write(pdf, str(tmp_path), even_odd=False)
+    pa_, pb_, n_a, _ = _split_and_write(pdf, str(tmp_path))
     ia, ib = str(tmp_path / "pia"), str(tmp_path / "pib")
     build_index(spark, pa_, ia, pconf)
     build_index(spark, pb_, ib, pconf, doc_id_base=n_a)
     out = str(tmp_path / "pmerged")
-    meta = merge_indexes(spark, [ia, ib], out, force_path="interleaved")
-    assert meta["merge_path"] == "interleaved"
+    merge_indexes(spark, [ia, ib], out)
     mi, fi = Index(spark, out), Index(spark, full)
     for q in ('"the small batch"', '"fast scan"', '"join order" -dup', "spark"):
         assert mi.search(q, k=15, mode="wand") == fi.search(q, k=15, mode="wand"), q
@@ -149,10 +159,10 @@ def test_merge_positional_interleaved(spark, transcripts_small, tmp_path):
 
 def test_reorder_positions_scrambled():
     """The position gather must be correct under a genuinely out-of-order
-    permutation (overlapping doc ranges across external segments)."""
+    permutation (the build's per-batch (term, salt) regrouping)."""
     import numpy as np
 
-    from localsearchengine_spark.operators.merge import reorder_positions
+    from localsearchengine_spark.operators.postings import reorder_positions
 
     rng = np.random.default_rng(7)
     tfs = rng.integers(1, 5, size=50).astype(np.int64)
@@ -170,7 +180,7 @@ def test_merge_pre_positions_segments(spark, transcripts_small, tmp_path):
     from pyspark.sql import functions as F
 
     path, pdf = transcripts_small
-    pa_, pb_, n_a, _ = _split_and_write(pdf, str(tmp_path), even_odd=False)
+    pa_, pb_, n_a, _ = _split_and_write(pdf, str(tmp_path))
     ia, ib = str(tmp_path / "via"), str(tmp_path / "vib")
     build_index(spark, pa_, ia, CONF)
     build_index(spark, pb_, ib, CONF, doc_id_base=n_a)
@@ -191,3 +201,34 @@ def test_merge_pre_positions_segments(spark, transcripts_small, tmp_path):
     queries = golden_queries()[::10]
     got = _query_all(Index(spark, out), queries)
     assert any(len(v) for v in got.values())
+
+
+def test_distributed_dictionary_matches_driver(spark, built_index, tmp_path, monkeypatch):
+    """write_dictionary's distributed branch (vocabularies too large for
+    the driver) writes the same rows and column types as the driver-side
+    branch, and the index answers the golden queries identically."""
+    import pyarrow.dataset as ds
+
+    from localsearchengine_spark.operators import postings
+
+    full_idx, _, _ = built_index
+    copy = str(tmp_path / "copy")
+    shutil.copytree(full_idx, copy)
+    monkeypatch.setattr(postings, "_DICT_DRIVER_MAX_ROWS", 0)
+    postings.write_dictionary(
+        spark, os.path.join(copy, "postings"), os.path.join(copy, "dictionary")
+    )
+
+    def dictionary(idx):
+        tbl = ds.dataset(os.path.join(idx, "dictionary"), format="parquet").to_table()
+        types = [(f.name, f.type) for f in tbl.schema]
+        return types, sorted(tbl.to_pylist(), key=lambda r: r["term"])
+
+    assert dictionary(copy) == dictionary(full_idx)
+    for mode in ("and", "or"):
+        queries = golden_queries()
+        got = {q["query_id"]: Index(spark, copy).search(q["terms"], k=q["k"], mode=mode)
+               for q in queries}
+        exp = {q["query_id"]: Index(spark, full_idx).search(q["terms"], k=q["k"], mode=mode)
+               for q in queries}
+        assert got == exp

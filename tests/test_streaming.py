@@ -100,3 +100,45 @@ def test_interrupted_swap_recovers(spark, tmp_path):
     ix.process_batch(spark.createDataFrame(make_transcripts(100, seed=3)), epoch_id=1)
     meta = read_json(os.path.join(live, "meta.json"))
     assert meta["n_docs"] == 400  # 300 recovered + 100 appended, not 100
+
+
+def test_append_after_compact_gets_fresh_doc_ids(spark, tmp_path):
+    """compact() keeps doc_ids but lowers n_docs, so an append must start
+    one past the live index's highest doc_id, not at its doc count: the
+    append succeeds, doc_ids stay unique, and queries match the oracle."""
+    import shutil
+
+    import numpy as np
+
+    from localsearchengine_spark.operators.delete import compact, delete_docs
+    from tests.oracle import oracle_search
+
+    live = str(tmp_path / "live")
+    ix = IncrementalIndexer(
+        spark, live, str(tmp_path / "work"),
+        BuildConfig(num_partitions=4, hot_df_threshold=300, block_size=64),
+    )
+    ix.process_batch(spark.createDataFrame(make_transcripts(1000, seed=1)), epoch_id=0)
+    delete_docs(live, [3, 10, 500])
+    compacted = str(tmp_path / "compacted")
+    assert compact(spark, live, compacted)["n_docs"] == 997
+    shutil.rmtree(live)
+    shutil.move(compacted, live)
+
+    ix.process_batch(spark.createDataFrame(make_transcripts(200, seed=2)), epoch_id=1)
+    docs = spark.read.parquet(os.path.join(live, "docs")).select("doc_id", "text").toPandas()
+    ids = docs["doc_id"].to_numpy()
+    assert len(ids) == 1197 and len(np.unique(ids)) == 1197
+    assert not {3, 10, 500} & set(ids.tolist())
+    assert ids.max() == 1199  # the batch took [1000, 1200)
+
+    index = Index(spark, live)
+    corpus = sorted(zip(ids.tolist(), docs["text"].tolist()))
+    for q in golden_queries()[::3]:
+        for mode in ("and", "or"):
+            got = index.search(q["terms"], k=q["k"], mode=mode)
+            exp = oracle_search(corpus, q["terms"], k=q["k"], mode=mode)
+            assert [d for d, _ in got] == [d for d, _ in exp], (q["terms"], mode)
+            np.testing.assert_allclose(
+                [s for _, s in got], [s for _, s in exp], atol=1e-9, rtol=0
+            )

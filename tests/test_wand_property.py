@@ -13,6 +13,7 @@ from localsearchengine_spark.config import BM25Config
 from localsearchengine_spark.operators import codec
 from localsearchengine_spark.operators.search import TermPostings, _topk
 from localsearchengine_spark.operators.wand import wand_topk
+from tests.test_codec import block_column
 
 CFG = BM25Config()
 RSJ = BM25Config(idf_variant="rsj")  # idf < 0 when df > N/2
@@ -45,15 +46,12 @@ def _term(name: str, doc_ids: list[int], rng: np.random.Generator, n_docs: int,
     ids = np.asarray(sorted(set(doc_ids)), dtype=np.int64)
     tfs = rng.integers(1, 6, size=len(ids)).astype(np.int64)
     dls = rng.integers(5, 60, size=len(ids)).astype(np.int64)
-    blocks = [
-        b._asdict()
-        for b in codec.encode_blocks(
-            ids, tfs, dls, block_size=block_size, k1=cfg.k1, b=cfg.b, avgdl=AVGDL
-        )
-    ]
+    blocks = codec.encode_blocks(
+        ids, tfs, dls, block_size=block_size, k1=cfg.k1, b=cfg.b, avgdl=AVGDL
+    )
     return TermPostings(
         term=name,
-        blocks=blocks,
+        streams=codec.read_blocks(block_column(blocks), [0]),
         idf=cfg.idf(len(ids), n_docs),
         df=len(ids),
         avgdl=AVGDL,
@@ -85,7 +83,7 @@ def test_wand_equals_exhaustive(data, n_terms, k, block_size, seed):
     ref_lists = []
     for p in plists:
         ref_lists.append(
-            TermPostings(p.term, p.blocks, p.idf, p.df, AVGDL, CFG)
+            TermPostings(p.term, p._streams, p.idf, p.df, AVGDL, CFG)
         )
     exp = _or_topk(ref_lists, k, CFG)
     assert got == exp
@@ -115,6 +113,6 @@ def test_wand_equals_exhaustive_negative_idf(data, n_terms, k, block_size, seed)
         plists.append(_term(f"t{i:02d}", ids, rng, n_docs, block_size, RSJ))
     plists.sort(key=lambda p: p.term)
     got = wand_topk(plists, k, RSJ)
-    ref_lists = [TermPostings(p.term, p.blocks, p.idf, p.df, AVGDL, RSJ) for p in plists]
+    ref_lists = [TermPostings(p.term, p._streams, p.idf, p.df, AVGDL, RSJ) for p in plists]
     exp = _or_topk(ref_lists, k, RSJ)
     assert got == exp
